@@ -13,102 +13,23 @@ joins (propagate along edges, then pointer-jump) — all shuffles on
 node id. The pointer-jump makes convergence O(log diameter), so the
 default 20 iterations cover components with diameters up to ~2^20 —
 plain one-hop propagation would need O(diameter) rounds and silently
-under-merge long chains. ``localCheckpoint`` truncates the growing
-lineage each iteration, which keeps deep iterative plans compilable.
+under-merge long chains. Both loops run on ``operators/fixpoint.py``
+(one checkpointed round per iteration, observed convergence, the
+keyed edge cache and its release).
 """
 
 from __future__ import annotations
 
-import threading
-import weakref
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-#: Guard for the iteration's shuffle-partition window: callers run CC
-#: on CONCURRENT driver threads (components_suite builds its variants
-#: that way), and a naive per-call save/set/restore races two ways —
-#: the second thread can save the first's TEMPORARY value and
-#: "restore" the session to 1 partition permanently, or size its own
-#: window from that temporary value and run a large iteration
-#: single-task. Every entrant therefore sizes from the ORIGINAL value
-#: (saved once by the first entrant), the session conf holds the MAX
-#: over all active windows (a big concurrent CC is never shrunk by a
-#: tiny one), and the last exit restores the original. State is keyed
-#: PER SparkSession (weakly, so a stopped session's entry is
-#: collectable): ``spark.sql.shuffle.partitions`` is a session-scoped
-#: conf, and a process-global saved value would let a second session's
-#: window size itself from — and "restore" — the FIRST session's
-#: setting (r8 ADVICE, medium). Residuals, documented: a concurrent
-#: NON-CC query planned inside someone else's active window sees the
-#: reduced setting, and a user conf change made mid-window is
-#: overwritten on exit — both performance-only, bounded by the
-#: window's duration, and impossible at scale (a big edge set sizes
-#: to the original, making the window a no-op).
-_conf_lock = threading.Lock()
-
-
-class _WindowState:
-    __slots__ = ("saved", "active")
-
-    def __init__(self) -> None:
-        self.saved: str | None = None
-        self.active: list[int] = []
-
-
-_conf_state: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-@contextmanager
-def _iteration_shuffle_window(sess, n_edges: int):
-    """Temporarily size ``spark.sql.shuffle.partitions`` from the
-    measured edge count (≥100k edges per partition; never raised above
-    the session setting — at scale this is a no-op)."""
-    key = "spark.sql.shuffle.partitions"
-    entered = False
-    npart = 0
-    with _conf_lock:
-        st = _conf_state.get(sess)
-        if st is None:
-            st = _WindowState()
-            _conf_state[sess] = st
-        try:
-            original = int(
-                sess.conf.get(key) if st.saved is None else st.saved
-            )
-        except ValueError:  # non-numeric conf (e.g. "auto")
-            original = None
-        if original is not None:
-            # enter even when npart == original: a LARGE concurrent CC
-            # must push its full size into the active set so a tiny
-            # window running beside it cannot hold the conf at 1 while
-            # the large iteration plans its rounds
-            npart = max(1, min(original, n_edges // 100_000 + 1))
-            saved_before = st.saved
-            if st.saved is None:
-                st.saved = str(original)
-            st.active.append(npart)
-            try:
-                sess.conf.set(key, str(max(st.active)))
-            except Exception:
-                # undo the bookkeeping so a failed set cannot pin
-                # max(active) for every future window (r8 ADVICE, low)
-                st.active.remove(npart)
-                st.saved = saved_before
-                raise
-            entered = True
-    try:
-        yield
-    finally:
-        if entered:
-            with _conf_lock:
-                st.active.remove(npart)
-                if st.active:
-                    sess.conf.set(key, str(max(st.active)))
-                elif st.saved is not None:
-                    sess.conf.set(key, st.saved)
-                    st.saved = None
+from geoestate_etl_spark.operators.fixpoint import (
+    CHANGED,
+    GraphLoop,
+    checkpoint,
+    iterate,
+)
 
 
 def connected_components(
@@ -136,88 +57,80 @@ def connected_components(
     driver-bounded-metadata class as the k-means centroids and range
     boundaries. Labels are the identical unique fixed point (min
     reachable id), pinned by ``tests/test_components.py`` parity.
-    ``None`` forces the distributed loop.
+    ``None`` forces the distributed loop, as do float and double ids
+    (NaN has no Python ordering) and NULL or binary ones.
     """
     # symmetrize in ONE pass over the pair plan: explode each pair into
     # both directions instead of `pairs UNION pairs-reversed`, which
     # executes the (often expensive, e.g. full MinHash-LSH) pair plan
     # TWICE on first materialization — measured as the dominant fixed
     # cost of corpus_pipeline's CC stage at sf0.1 (r8)
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(left_col).alias("src"),
-                        F.col(right_col).alias("dst"),
-                    ),
-                    F.struct(
-                        F.col(right_col).alias("src"),
-                        F.col(left_col).alias("dst"),
-                    ),
-                )
-            ).alias("_e")
+    fwd = F.struct(F.col(left_col).alias("src"), F.col(right_col).alias("dst"))
+    rev = F.struct(F.col(right_col).alias("src"), F.col(left_col).alias("dst"))
+    sym = pairs.select(F.explode(F.array(fwd, rev)).alias("_e")).select("_e.*")
+    with GraphLoop(pairs.sparkSession) as loop:
+        # the edge count (materializing the pair plan WITH AQE) picks
+        # the tier, then sizes the distributed loop's shuffles
+        edges = loop.edges(sym, distinct=True)
+        id_type = edges.schema["src"].dataType
+        if (
+            driver_max_edges is not None
+            and loop.n_edges <= driver_max_edges
+            and not isinstance(id_type, (T.FloatType, T.DoubleType))
+        ):
+            out = _cc_driver(pairs.sparkSession, edges, id_type)
+            if out is not None:  # None = NULL or unhashable ids; use the loop
+                return out
+        # keyed on dst: every round's neighbor join reuses the cached
+        # partitioning and order instead of re-exchanging the edges
+        edges = loop.keyed(edges, "dst")
+        # start: every node labeled with the min of itself and its
+        # neighbors (the edges are symmetric, so grouping on dst rides
+        # the keyed layout). NOT checkpointed — round 0's checkpoint
+        # materializes it along with its own work
+        labels = (
+            edges.groupBy("dst")
+            .agg(F.min("src").alias("m"))
+            .select(F.col("dst").alias("id"), F.least("dst", "m").alias("component"))
         )
-        .select("_e.src", "_e.dst")
-        .distinct()
-        .persist()
-    )
 
-    # Materialize the (possibly expensive) pair plan into the cache
-    # now and size the ITERATION's shuffles from the measured edge
-    # count: localCheckpoint bypasses AQE (docs/TUNING.md §traps), so
-    # without this every tiny iteration round pays the session's full
-    # shuffle-partition fan-out in empty-task scheduling — measured as
-    # ~3s of corpus_pipeline's fixed cost at sf0.1 (r8). At scale the
-    # clamp leaves the session setting untouched (≥100k edges per
-    # partition keeps npart == default long before memory matters).
-    n_edges = edges.count()
-    if driver_max_edges is not None and n_edges <= driver_max_edges:
-        out = _cc_driver(pairs.sparkSession, edges)
-        if out is not None:  # None = NULL ids seen; use the loop
-            edges.unpersist()
-            return out
-    # Truncate the edge lineage AFTER the cache is materialized: the
-    # checkpoint scans cached partitions (cheap, and the expensive
-    # upstream already executed WITH AQE via the count above), and the
-    # iteration plans stop embedding the whole upstream logical tree —
-    # Catalyst re-analyzed the full MinHash-LSH lineage once per round
-    # otherwise, the other measured fixed cost of corpus_pipeline's CC
-    # stage (r8).
-    cached = edges
-    edges = cached.localCheckpoint(eager=True)
-    cached.unpersist()
+        def step(labels: DataFrame, _: int) -> DataFrame:
+            # propagate: each node adopts min(own label, neighbors' labels)
+            neighbor_labels = (
+                edges.join(labels.withColumnRenamed("id", "dst"), "dst")
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.min("component").alias("n_comp"))
+            )
+            propagated = labels.join(neighbor_labels, "id", "left").select(
+                "id",
+                F.col("component").alias("_old"),
+                F.least("component", F.coalesce("n_comp", "component")).alias(
+                    "component"
+                ),
+            )
+            # pointer-jump (path halving): also adopt the label OF my
+            # label. Neighbor propagation alone moves labels one hop per
+            # round (O(diameter) rounds — a long chain would not
+            # converge within max_iter); with jumping it is O(log n).
+            parents = propagated.select(
+                F.col("id").alias("component"), F.col("component").alias("parent")
+            )
+            comp = F.least("component", F.coalesce("parent", "component"))
+            return propagated.join(parents, "component", "left").select(
+                "id", comp.alias("component"), (comp != F.col("_old")).alias(CHANGED)
+            )
 
-    # start: every node labeled with the min of itself and its
-    # neighbors. NOT checkpointed — it is one hash-agg over the cached
-    # edges, so iteration 0's checkpoint materializes it along with its
-    # own work (one fewer action/barrier per call)
-    labels = (
-        edges.groupBy("src")
-        .agg(F.least(F.min("dst"), F.first("src")).alias("component"))
-        .select(
-            F.col("src").alias("id"),
-            F.least("src", "component").alias("component"),
-        )
-    )
-
-    # the loop plans (and eagerly executes) each round inside the
-    # sized-shuffle window (thread-safe, see _iteration_shuffle_window)
-    with _iteration_shuffle_window(pairs.sparkSession, n_edges):
-        return _cc_iterate(edges, labels, max_iter)
+        return iterate(labels, step, max_iter)
 
 
-def _cc_driver(spark, edges: DataFrame) -> "DataFrame | None":
+def _cc_driver(spark, edges: DataFrame, id_type) -> "DataFrame | None":
     """Union-find over a driver-collected (small, deduped, symmetric)
     edge set — same (id, component=min reachable id) contract as the
     distributed loop. Union-by-min keeps every set's root at its
     minimum member; path halving keeps finds near-constant at this
-    size. Returns None when a NULL id is present (Python cannot order
-    None against values; the caller falls back to the distributed
-    loop, whose null-key groupBy semantics are the contract)."""
-    from pyspark.sql import types as T
-
-    id_type = edges.schema["src"].dataType
+    size. Returns None when a NULL or unhashable id is present (the
+    caller falls back to the distributed loop, whose null-key groupBy
+    semantics are the contract)."""
     parent: dict = {}
 
     def find(x):
@@ -242,10 +155,11 @@ def _cc_driver(spark, edges: DataFrame) -> "DataFrame | None":
                     ra, rb = rb, ra
                 parent[rb] = ra  # min id stays the root
     except TypeError:
-        # ids Python can't hash or order consistently with Spark
-        # (BinaryType collects as bytearray → unhashable; float NaN
-        # breaks the min-root invariant) — fall back to the
-        # distributed loop, mirroring the NULL-id fallback (r9 ADVICE)
+        # ids Python can't hash (BinaryType collects as bytearray) —
+        # fall back to the distributed loop, mirroring the NULL-id
+        # fallback (r9 ADVICE). Float ids never get here: NaN raises
+        # nothing, yet ``parent[root] != root`` holds forever for it,
+        # so the caller sends float and double ids to the loop up front
         return None
 
     rows = [(x, find(x)) for x in parent]
@@ -256,71 +170,6 @@ def _cc_driver(spark, edges: DataFrame) -> "DataFrame | None":
         ]
     )
     return spark.createDataFrame(rows, schema)
-
-
-def _cc_iterate(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
-    from pyspark.sql import Observation
-
-    for _ in range(max_iter):
-        # propagate: each node adopts min(own label, neighbors' labels)
-        neighbor_labels = (
-            edges.join(labels.withColumnRenamed("id", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("component").alias("n_comp"))
-            .withColumnRenamed("src", "id")
-        )
-        propagated = labels.join(neighbor_labels, "id", "left").select(
-            "id",
-            F.col("component").alias("_old"),
-            F.least("component", F.coalesce("n_comp", "component")).alias(
-                "component"
-            ),
-        )
-        # pointer-jump (path halving): also adopt the label OF my label.
-        # Neighbor propagation alone moves labels one hop per round
-        # (O(diameter) rounds — a long chain would not converge within
-        # max_iter); combined with jumping, convergence is O(log n).
-        parents = propagated.select(
-            F.col("id").alias("component"), F.col("component").alias("parent")
-        )
-        # convergence check rides the checkpoint's materialization via
-        # the Observation API — no separate join+count job per round
-        obs = Observation()
-        new_labels = (
-            propagated.join(parents, "component", "left")
-            .select(
-                "id",
-                "_old",
-                F.least(
-                    "component", F.coalesce("parent", "component")
-                ).alias("component"),
-            )
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("component") != F.col("_old")).cast("long")
-                ).alias("changed"),
-            )
-            .drop("_old")
-            .localCheckpoint()
-        )
-        try:
-            changed = int(obs.get["changed"] or 0)
-        except Exception:
-            # Spark 4.1 quirk: metrics rows over driver-local relations
-            # trip PythonSQLUtils.toPyRow (see corpus_pipeline); such
-            # inputs are tiny test frames, so the direct join costs ~0
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -381,30 +230,23 @@ def connected_components_star(
     # node set and the edge set both derive from the checkpointed raw
     # frame instead of each re-executing the pair lineage (same
     # double-compute fix as connected_components' symmetrize, r8)
-    raw = pairs.select(
-        F.col(left_col).alias("u"), F.col(right_col).alias("v")
-    ).localCheckpoint()
+    raw = checkpoint(
+        pairs.select(F.col(left_col).alias("u"), F.col(right_col).alias("v"))
+    )
     # node set from the RAW pairs: a self-loop-only node is its own
     # (singleton) component and must still get a label
-    all_nodes = (
-        raw.select(F.explode(F.array("u", "v")).alias("id"))
-        .distinct()
-        .localCheckpoint()
+    all_nodes = checkpoint(
+        raw.select(F.explode(F.array("u", "v")).alias("id")).distinct()
     )
-    edges = (
-        raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
+    # converged when the (distinct) edge set is unchanged: the observed
+    # row counts first, the one-sided difference only when they agree
+    edges = iterate(
+        raw.filter(F.col("u") != F.col("v")).distinct(),
+        lambda e, _: _small_star(_large_star(e)),
+        max_iter,
+        until=lambda r: r.rows == r.prev_rows
+        and r.new.exceptAll(r.prev).limit(1).count() == 0,
     )
-    for _ in range(max_iter):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint()
-        # converged when the (distinct) edge set is unchanged:
-        # equal cardinality + empty one-sided difference
-        if (
-            new_edges.count() == edges.count()
-            and new_edges.exceptAll(edges).limit(1).count() == 0
-        ):
-            edges = new_edges
-            break
-        edges = new_edges
     # fixed point is a forest of stars (u → component root); roots
     # appear only on the right, so union them back as self-labeled
     labels = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))

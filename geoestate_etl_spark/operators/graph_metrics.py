@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geoestate_etl_spark.operators.fixpoint import iterate
+
 
 def _oriented(edges: DataFrame, left_col: str, right_col: str) -> DataFrame:
     """Canonical undirected edge set re-oriented by (degree, id):
@@ -107,23 +109,12 @@ def k_core(
     (peeling is confluent), so iteration count never affects the
     result — what lets the oracle unroll a fixed number of SQL
     rounds. Scale shape: each round is one degree aggregation + two
-    semi joins on a monotonically SHRINKING edge set, with
-    localCheckpoint truncating lineage per round (the
-    connected_components discipline); rounds ≤ the peel depth, which
-    is small on power-law graphs (most nodes fall in the first
-    rounds).
+    semi joins on a monotonically SHRINKING edge set, one checkpointed
+    round at a time on ``operators/fixpoint.py``; rounds ≤ the peel
+    depth, which is small on power-law graphs (most nodes fall in the
+    first rounds).
     """
-    cur = (
-        edges.select(
-            F.least(left_col, right_col).alias("u"),
-            F.greatest(left_col, right_col).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_cur = cur.count()
-    for _ in range(max_iter):
+    def peel(cur: DataFrame, _: int) -> DataFrame:
         deg = (
             cur.select(F.col("u").alias("id"))
             .union(cur.select(F.col("v").alias("id")))
@@ -131,19 +122,26 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         keep = deg.filter(F.col("cnt") >= k)
-        nxt = (
-            cur.join(keep.select(F.col("id").alias("u")), "u", "left_semi")
-            .join(keep.select(F.col("id").alias("v")), "v", "left_semi")
-            .localCheckpoint()
+        return cur.join(keep.select(F.col("id").alias("u")), "u", "left_semi").join(
+            keep.select(F.col("id").alias("v")), "v", "left_semi"
         )
-        n_nxt = nxt.count()  # n_cur carries over — one job per round
-        cur = nxt
-        if n_nxt == n_cur:
-            break
-        n_cur = n_nxt
+
+    # converged when a round peels nothing: the observed edge count of
+    # the round's checkpoint equals the previous one
+    core = iterate(
+        edges.select(
+            F.least(left_col, right_col).alias("u"),
+            F.greatest(left_col, right_col).alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct(),
+        peel,
+        max_iter,
+        until=lambda r: r.rows == r.prev_rows,
+    )
     return (
-        cur.select(F.col("u").alias("id"))
-        .union(cur.select(F.col("v").alias("id")))
+        core.select(F.col("u").alias("id"))
+        .union(core.select(F.col("v").alias("id")))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("core_deg"))
     )

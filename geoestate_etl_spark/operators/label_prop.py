@@ -15,9 +15,9 @@ Scale shape per round: one edge join against the current label table
 (shuffle on node id) + one groupBy over (node, label) + one
 ``max_by`` per node — no windows over the corpus, no driver state.
 Fixed ``iters`` bounds the plan (labels reach ``iters`` hops from a
-seed — the practical curation radius); ``localCheckpoint`` every
-round truncates the iterative lineage exactly like
-``connected_components``.
+seed — the practical curation radius); the rounds run on
+``operators/fixpoint.py`` (one checkpoint per round over a keyed edge
+cache).
 
 Determinism: ties on summed weight break to the SMALLEST label, so
 results are partition-layout-independent.
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from geoestate_etl_spark.operators.fixpoint import GraphLoop, iterate
 
 __all__ = ["propagate_labels"]
 
@@ -60,24 +62,27 @@ def propagate_labels(
     seed_tbl = seeds.select(
         F.col(id_col).alias("id"), F.col(label_col).alias("label")
     ).withColumn("is_seed", F.lit(True))
-    labels = seed_tbl
-    for _ in range(iters):
-        votes = (
-            both.join(labels.select(F.col("id").alias("src"), "label"), "src")
-            .groupBy(F.col("dst").alias("id"), "label")
-            .agg(F.sum("w").alias("_wsum"))
-        )
-        # per node: heaviest label, ties to the smallest label value
-        winner = votes.groupBy("id").agg(
-            F.min_by(
-                "label", F.struct((-F.col("_wsum")).alias("w"), F.col("label"))
-            ).alias("label")
-        )
-        labels = (
-            seed_tbl.unionByName(
-                winner.join(seed_tbl.select("id"), "id", "left_anti")
-                .withColumn("is_seed", F.lit(False)),
-                allowMissingColumns=False,
+
+    with GraphLoop(edges.sparkSession) as loop:
+        # keyed on src: every round's vote join reuses the cached layout
+        both = loop.edges(both, key="src")
+
+        def step(labels: DataFrame, _: int) -> DataFrame:
+            votes = (
+                both.join(labels.select(F.col("id").alias("src"), "label"), "src")
+                .groupBy(F.col("dst").alias("id"), "label")
+                .agg(F.sum("w").alias("_wsum"))
             )
-        ).localCheckpoint(eager=False)
-    return labels
+            # per node: heaviest label, ties to the smallest label value
+            winner = votes.groupBy("id").agg(
+                F.min_by(
+                    "label", F.struct((-F.col("_wsum")).alias("w"), F.col("label"))
+                ).alias("label")
+            )
+            return seed_tbl.unionByName(
+                winner.join(seed_tbl.select("id"), "id", "left_anti").withColumn(
+                    "is_seed", F.lit(False)
+                )
+            )
+
+        return iterate(seed_tbl, step, iters)

@@ -5,15 +5,16 @@ prioritizing canonical documents inside near-duplicate clusters.
 Per iteration: one join (edges ⋈ ranks) + one aggregation (contribs
 per dst) + a 1-row dangling-mass aggregate broadcast back into the
 rank update — all keyed shuffles, ZERO driver round-trips inside the
-loop. ``localCheckpoint`` truncates lineage per iteration (same
-discipline as connected_components) and, being eager, is the
-iteration's single job.
+loop. The rounds run on ``operators/fixpoint.py``: one eager
+checkpoint per iteration (its single job) over a keyed edge cache.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from geoestate_etl_spark.operators.fixpoint import GraphLoop, iterate
 
 
 def pagerank(
@@ -37,79 +38,54 @@ def pagerank(
     ``seeds=None`` the classic uniform behavior is unchanged. The
     teleport vector rides as a literal ``isin`` Column — seed sets are
     query parameters, bounded, never a join."""
-    # persist the raw edges: the node derivation and the keyed relayout
-    # below both scan them, so the source scan runs once
-    edges = edges.persist()
-    nodes = (
-        edges.select(F.col(src).alias("id"))
-        .union(edges.select(F.col(dst).alias("id")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:  # empty graph (e.g. a pair-finder found nothing)
-        edges.unpersist()
-        nodes.unpersist()
-        return edges.sparkSession.createDataFrame([], "id long, pr double")
     if seeds is not None:
         if not seeds:
             raise ValueError("seeds must be non-empty when given")
         # dedupe, and REQUIRE every seed to exist in the graph: an
         # absent seed silently drains teleport mass (all-zero ranks
         # when no seed is present; sum < 1 otherwise) — breaking the
-        # mass-conservation contract with no error (r4 review)
+        # mass-conservation contract with no error (r4 review). Checked
+        # before anything is persisted, so a bad seed set leaks nothing
         uniq = sorted({int(s) for s in seeds})
         present = {
-            r.id for r in nodes.filter(F.col("id").isin(uniq)).collect()
+            r.id
+            for r in edges.select(F.explode(F.array(src, dst)).alias("id"))
+            .filter(F.col("id").isin(uniq))
+            .distinct()
+            .collect()
         }
         missing = [s for s in uniq if s not in present]
-        if missing:
+        if missing and edges.limit(1).count():  # empty graph: empty ranks
             raise ValueError(f"seeds not in graph: {missing}")
         p = F.when(
             F.col("id").isin(uniq), F.lit(1.0 / len(uniq))
         ).otherwise(F.lit(0.0))
-    else:
-        p = F.lit(1.0 / n)
 
-    ranks = nodes.withColumn("pr", p).localCheckpoint()
-
-    # size the iteration's shuffles from the measured edge count (the
-    # connected_components discipline, r10): localCheckpoint bypasses
-    # AQE, so every round otherwise pays the session's full
-    # shuffle-partition fan-out in empty-task scheduling — measured as
-    # most of the fixpoint's fixed cost on small graphs (62 jobs, ~5s
-    # at sf0.1). The cache is already materialized (nodes.count()
-    # above), so this count is a cheap cached scan; at scale the clamp
-    # is a no-op (≥100k edges per partition reaches the session
-    # setting long before memory matters).
-    from geoestate_etl_spark.operators.components import (
-        _iteration_shuffle_window,
-    )
-
-    n_edges = edges.count()
-    with _iteration_shuffle_window(edges.sparkSession, n_edges):
-        # loop-invariant edge layout (guide §2.4): hash-partition +
-        # sort the cached edge relation by the join key ONCE, so every
-        # iteration's contrib join reuses the cached partitioning and
-        # ordering instead of re-exchanging (and re-sorting) the full
-        # edge set per round — at scale that is `iters` fewer full
-        # edge shuffles. repartition() picks up the window's sized
-        # partition count; the one build-time exchange reads the
-        # already-materialized cache.
-        edges_keyed = (
-            edges.repartition(F.col(src))
-            .sortWithinPartitions(src)
-            .persist()
+    with GraphLoop(edges.sparkSession) as loop:
+        # the raw edges are cached and counted once (the node
+        # derivation and the keyed relayout both scan them)
+        raw = loop.edges(edges)
+        nodes = loop.hold(
+            raw.select(F.col(src).alias("id"))
+            .union(raw.select(F.col(dst).alias("id")))
+            .distinct()
         )
+        n = nodes.count()
+        if n == 0:  # empty graph (e.g. a pair-finder found nothing)
+            return edges.sparkSession.createDataFrame([], "id long, pr double")
+        if seeds is None:
+            p = F.lit(1.0 / n)
+        # keyed on src: every round's contrib join reuses the cached
+        # partitioning and order — `iters` fewer full edge shuffles
+        keyed = loop.keyed(raw, src)
         # loop-invariant out-degree table, derived from the keyed cache
         # so its groupBy reuses the partitioning (no exchange); feeds
-        # the contrib join and the dangling anti-join every iteration
-        out_deg = (
-            edges_keyed.groupBy(src).agg(F.count("*").alias("deg")).persist()
-        )
-        for _ in range(iters):
+        # the contrib join and the dangling anti-join every round
+        out_deg = loop.hold(keyed.groupBy(src).agg(F.count("*").alias("deg")))
+
+        def step(ranks: DataFrame, _: int) -> DataFrame:
             contribs = (
-                edges_keyed.join(ranks.withColumnRenamed("id", src), src)
+                keyed.join(ranks.withColumnRenamed("id", src), src)
                 .join(out_deg, src)
                 .select(F.col(dst).alias("id"), (F.col("pr") / F.col("deg")).alias("c"))
                 .groupBy("id")
@@ -118,13 +94,13 @@ def pagerank(
             # mass of nodes with no outgoing edges, redistributed
             # uniformly. Stays IN-PLAN as a 1-row aggregate broadcast
             # into the rank update — a driver-side collect here would
-            # add a full extra Spark job + driver sync per iteration
-            # (round-1 verdict #4); this way the eager localCheckpoint
-            # below is the iteration's single job.
+            # add a full extra Spark job + driver sync per round
+            # (round-1 verdict #4); this way the round's checkpoint is
+            # its single job.
             dangling = ranks.join(
                 out_deg.withColumnRenamed(src, "id"), "id", "left_anti"
             ).agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
-            ranks = (
+            return (
                 nodes.join(contribs, "id", "left")
                 .crossJoin(F.broadcast(dangling))
                 .select(
@@ -147,11 +123,6 @@ def pagerank(
                         )
                     ).alias("pr"),
                 )
-                .localCheckpoint()
             )
 
-    edges.unpersist()
-    edges_keyed.unpersist()
-    out_deg.unpersist()
-    nodes.unpersist()
-    return ranks
+        return iterate(nodes.withColumn("pr", p), step, iters)

@@ -11,9 +11,9 @@ Spark shape (Pregel-style, the 100 TB story):
   edge relation is bucketed/pre-partitioned by ``src`` once and every
   level reuses that partitioning;
 - per-level ``localCheckpoint`` truncates the iterative lineage
-  (the components/pagerank discipline) and the loop EARLY-STOPS on an
-  empty frontier, so cost is O(diameter) levels — BFS on small-world
-  graphs converges in a handful of levels regardless of node count;
+  (``operators/fixpoint.py``) and the loop EARLY-STOPS on an empty
+  frontier, so cost is O(diameter) levels — BFS on small-world graphs
+  converges in a handful of levels regardless of node count;
 - the visited set carries ``(id, dist)`` only — node-count-bounded,
   never edge-bounded.
 
@@ -31,7 +31,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from geoestate_etl_spark.operators.fixpoint import (
+    CHANGED,
+    GraphLoop,
+    checkpoint,
+    iterate,
+)
 
 
 def symmetrized_edges(
@@ -81,82 +87,33 @@ def bfs_distances(
     graph the loop usually early-stops well before the bound.
     """
     spark = edges.sparkSession
-    # Persist the derived edge relation: every level joins it, and
-    # without the cache each level re-runs the symmetrize shuffle over
-    # the full edge set — measured 11.2s → ~4.4s at sf0.1 (r4 bench).
-    # Unpersisted before return (r4 review): the returned frame is
-    # checkpoint-truncated, so releasing the cache is safe.
-    # Loop-invariant edge layout (guide §2.4, r10): ONE exchange keyed
-    # on the join key builds the relation every level reuses —
-    # HashPartitioning(u) co-locates all (u, v) duplicates, so the
-    # dedup's hash aggregate and the within-partition sort both ride
-    # that exchange (the old shape paid a (u, v)-keyed distinct
-    # exchange AND re-exchanged/re-sorted the full edge set inside
-    # every level's sort-merge join at scale; the cached partitioning +
-    # ordering now satisfy the join's requirements directly). The
-    # count materializes the cache (the first level's join needed that
-    # work anyway) and sizes the level loop's checkpoint shuffles (the
-    # connected_components discipline — localCheckpoint bypasses AQE,
-    # so each level otherwise pays the session's full shuffle-partition
-    # fan-out in empty-task scheduling; at scale the clamp is a no-op).
-    from pyspark.sql import Observation
+    with GraphLoop(spark) as loop:
+        # one keyed exchange builds the edge cache every level joins
+        # (the dedup and the sort ride it); measured 11.2s → ~4.4s at
+        # sf0.1 against re-deriving the symmetrized edges per level (r4)
+        e = loop.edges(
+            symmetrized_edges(edges, src_col, dst_col, directed, dedup=False),
+            key="u",
+            distinct=True,
+        )
+        visited = checkpoint(
+            spark.createDataFrame([(int(source), 0)], "id long, dist int")
+        )
 
-    from geoestate_etl_spark.operators.components import (
-        _iteration_shuffle_window,
-    )
-
-    e = (
-        symmetrized_edges(edges, src_col, dst_col, directed, dedup=False)
-        .repartition(F.col("u"))
-        .dropDuplicates()
-        .sortWithinPartitions("u")
-        .persist()
-    )
-    n_edges = e.count()
-
-    visited = spark.createDataFrame(
-        [(int(source), 0)],
-        T.StructType(
-            [
-                T.StructField("id", T.LongType()),
-                T.StructField("dist", T.IntegerType()),
-            ]
-        ),
-    ).localCheckpoint(eager=True)
-    frontier = visited.select("id")
-    with _iteration_shuffle_window(spark, n_edges):
-        for d in range(1, max_hops + 1):
-            # the empty-frontier check rides the eager checkpoint's
-            # materialization via the Observation API — no separate
-            # isEmpty job per level (the connected_components
-            # convergence-check discipline)
-            obs = Observation()
+        def step(visited: DataFrame, i: int) -> DataFrame:
+            # level i+1 = unvisited neighbors of level i; the round
+            # stops the loop once it marks no new node
+            frontier = visited.filter(F.col("dist") == i)
             nxt = (
                 frontier.join(e, frontier["id"] == e["u"])
                 .select(F.col("v").alias("id"))
                 .distinct()
                 .join(visited, "id", "left_anti")
-                .withColumn("dist", F.lit(d).cast("int"))
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
+                .withColumn("dist", F.lit(i + 1).cast("int"))
             )
-            try:
-                n_new = int(obs.get["n"] or 0)
-            except Exception:
-                # Spark 4.1 quirk: metrics rows over driver-local
-                # relations trip PythonSQLUtils.toPyRow (see
-                # corpus_pipeline) — tiny test inputs fall back to the
-                # direct (checkpointed, cheap) count
-                n_new = nxt.count()
-            if n_new == 0:
-                break
-            # visited is a union of per-level CHECKPOINTED frames — the
-            # lineage stays O(levels) shallow without re-materializing
-            # the cumulative set every round
-            visited = visited.union(nxt)
-            frontier = nxt.select("id")
-    e.unpersist()
-    return visited
+            return visited.union(nxt).withColumn(CHANGED, F.col("dist") == i + 1)
+
+        return iterate(visited, step, max_hops)
 
 
 def sssp_distances(
@@ -185,97 +142,49 @@ def sssp_distances(
     Negative edges are tolerated up to the hop bound (no negative-
     cycle divergence: the bound caps path length).
     """
-    # same keyed one-exchange edge layout as bfs_distances (r10):
-    # repartition by the join key, dedup and sort riding that exchange
-    e = (
-        symmetrized_edges(
-            edges.select(
-                F.col(src_col).alias("src"),
-                F.col(dst_col).alias("dst"),
-                F.col(weight_col).cast("long").alias("w"),
-            ),
-            "src",
-            "dst",
-            directed,
-            extra_cols=("w",),
-            dedup=False,
-        )
-        .repartition(F.col("u"))
-        .dropDuplicates()
-        .sortWithinPartitions("u")
-        .persist()
-    )
-
     spark = edges.sparkSession
-    # same iteration discipline as bfs_distances (r10): materialize the
-    # edge cache, size the relax loop's checkpoint shuffles from the
-    # measured edge count (no-op at scale), and let the convergence
-    # check ride the eager checkpoint via Observation instead of a
-    # dedicated isEmpty join job per round.
-    from pyspark.sql import Observation
+    with GraphLoop(spark) as loop:
+        # same keyed one-exchange edge cache as bfs_distances
+        e = loop.edges(
+            symmetrized_edges(
+                edges.select(
+                    F.col(src_col).alias("src"),
+                    F.col(dst_col).alias("dst"),
+                    F.col(weight_col).cast("long").alias("w"),
+                ),
+                "src",
+                "dst",
+                directed,
+                extra_cols=("w",),
+                dedup=False,
+            ),
+            key="u",
+            distinct=True,
+        )
+        dist = checkpoint(
+            spark.createDataFrame([(int(source), 0)], "id long, cost long")
+        )
 
-    from geoestate_etl_spark.operators.components import (
-        _iteration_shuffle_window,
-    )
-
-    n_edges = e.count()
-    dist = spark.createDataFrame(
-        [(int(source), 0)],
-        T.StructType(
-            [
-                T.StructField("id", T.LongType()),
-                T.StructField("cost", T.LongType()),
-            ]
-        ),
-    ).localCheckpoint(eager=True)
-    with _iteration_shuffle_window(spark, n_edges):
-        for _ in range(max_hops):
-            relaxed = (
-                dist.join(e, dist["id"] == e["u"])
-                .select(F.col("v").alias("id"), (F.col("cost") + F.col("w")).alias("cost"))
+        def step(dist: DataFrame, _: int) -> DataFrame:
+            relaxed = dist.join(e, dist["id"] == e["u"]).select(
+                F.col("v").alias("id"), (F.col("cost") + F.col("w")).alias("cost")
             )
-            # convergence = no node improved and none appeared: the old
-            # cost rides the aggregate (min over cost carries the pair
-            # (cost, old) per node), observed during the checkpoint's
-            # materialization
-            obs = Observation()
-            new_dist = (
+            # a node changed when it improved or appeared: the old cost
+            # rides the aggregate (min over cost carries the pair
+            # (cost, old) per node)
+            return (
                 dist.withColumnRenamed("cost", "old")
                 .withColumn("cost", F.col("old"))
                 .unionByName(relaxed.withColumn("old", F.lit(None).cast("long")))
                 .groupBy("id")
-                .agg(
-                    F.min("cost").alias("cost"),
-                    F.min("old").alias("_old"),
+                .agg(F.min("cost").alias("cost"), F.min("old").alias("_old"))
+                .select(
+                    "id",
+                    "cost",
+                    (F.col("_old").isNull() | (F.col("cost") < F.col("_old"))).alias(
+                        CHANGED
+                    ),
                 )
-                .observe(
-                    obs,
-                    F.sum(
-                        (
-                            F.col("_old").isNull()
-                            | (F.col("cost") < F.col("_old"))
-                        ).cast("long")
-                    ).alias("improved"),
-                )
-                .drop("_old")
-                .localCheckpoint(eager=True)
             )
-            try:
-                n_improved = int(obs.get["improved"] or 0)
-            except Exception:
-                # driver-local-relation quirk: fall back to the direct
-                # join check over the (checkpointed, cheap) frames
-                n_improved = (
-                    new_dist.join(
-                        dist.withColumnRenamed("cost", "old"), "id", "left"
-                    )
-                    .filter(F.col("old").isNull() | (F.col("cost") < F.col("old")))
-                    .limit(1)
-                    .count()
-                )
-            if n_improved == 0:
-                e.unpersist()
-                return new_dist
-            dist = new_dist
-    e.unpersist()
-    return dist
+
+        return iterate(dist, step, max_hops)

@@ -6,8 +6,8 @@ embeddings the way documents become token streams.
 Spark shape (the 100 TB story):
 
 - the adjacency relation is built ONCE (symmetrize → distinct →
-  per-source neighbor index + degree) and persisted across steps —
-  the loop-invariant, like BFS's edge set (docs/TUNING.md §iterative);
+  per-source neighbor index + degree) and held as the loop's edge
+  cache across steps (``operators/fixpoint.py``);
 - each step is ONE equi-join on the current node id: the walk row
   carries ``cur``, the adjacency row carries ``(u, idx, deg)``, and
   the step picks the neighbor whose index equals
@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from geoestate_etl_spark.operators.fixpoint import GraphLoop, iterate
 
 
 def build_adjacency(
@@ -68,7 +70,6 @@ def random_walks(
     """``(walk_id, start, path)`` — one row per walk; ``path`` is the
     node array (length ``walk_len + 1`` unless a directed dead end
     froze it early). Starts one batch of walks at EVERY node."""
-    adj = build_adjacency(edges, src_col, dst_col, directed).persist()
     # start nodes = BOTH endpoints: a directed sink has no adjacency
     # row but still starts (and immediately freezes) its walks
     raw = edges.select(
@@ -76,27 +77,27 @@ def random_walks(
     ).union(edges.select(F.col(dst_col).cast("long").alias("n")))
     nodes = raw.distinct().select(F.col("n").alias("start"))
 
-    walks = nodes.crossJoin(
-        adj.sparkSession.range(walks_per_node).select(F.col("id").alias("k"))
-    ).select(
-        (F.col("start") * walks_per_node + F.col("k")).alias("walk_id"),
-        "start",
-        F.col("start").alias("cur"),
-        F.array(F.col("start")).alias("path"),
-    )
-
-    for step in range(1, walk_len + 1):
-        choice = F.pmod(
-            F.xxhash64(F.col("walk_id"), F.lit(step), F.lit(seed)),
-            F.col("deg"),
+    with GraphLoop(edges.sparkSession) as loop:
+        adj = loop.edges(build_adjacency(edges, src_col, dst_col, directed))
+        walks = nodes.crossJoin(
+            adj.sparkSession.range(walks_per_node).select(F.col("id").alias("k"))
+        ).select(
+            (F.col("start") * walks_per_node + F.col("k")).alias("walk_id"),
+            "start",
+            F.col("start").alias("cur"),
+            F.array(F.col("start")).alias("path"),
         )
-        walks = (
-            walks.join(
+
+        def step(walks: DataFrame, i: int) -> DataFrame:
+            choice = F.pmod(
+                F.xxhash64(F.col("walk_id"), F.lit(i + 1), F.lit(seed)),
+                F.col("deg"),
+            )
+            return walks.join(
                 adj,
                 (walks["cur"] == adj["u"]) & (adj["idx"] == choice),
                 "left",
-            )
-            .select(
+            ).select(
                 "walk_id",
                 "start",
                 F.coalesce(F.col("v"), F.col("cur")).alias("cur"),
@@ -107,12 +108,8 @@ def random_walks(
                 .otherwise(F.col("path"))
                 .alias("path"),
             )
-            .localCheckpoint(eager=True)
-        )
-    # walk state is checkpoint-truncated — release the adjacency cache
-    # (r4 review: operators over different inputs must not accumulate)
-    adj.unpersist()
-    return walks.select("walk_id", "start", "path")
+
+        return iterate(walks, step, walk_len).select("walk_id", "start", "path")
 
 
 def node_embeddings(

@@ -177,7 +177,7 @@ def test_shuffle_window_state_is_per_session(spark):
     a second session entering a window while the first's is active
     must size from — and restore — ITS OWN original, not the first
     session's."""
-    from geoestate_etl_spark.operators.components import (
+    from geoestate_etl_spark.operators.fixpoint import (
         _iteration_shuffle_window,
     )
 
@@ -206,7 +206,7 @@ def test_shuffle_window_failed_set_rolls_back_bookkeeping(spark):
     """A conf.set that raises must not leak its npart into the active
     set (r8 ADVICE, low): the next window would otherwise be pinned to
     max(active) forever."""
-    from geoestate_etl_spark.operators import components as C
+    from geoestate_etl_spark.operators import fixpoint as C
 
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
@@ -252,3 +252,30 @@ def test_driver_tier_null_ids_fall_back_to_loop(spark):
         ).collect()
     }
     assert got == want
+
+
+def test_driver_tier_nan_ids_fall_back_to_loop(spark):
+    """A float NaN id compares unequal to itself, so union-find's
+    ``parent[root] != root`` never settles on it and no TypeError
+    fires: float ids must go to the distributed loop up front. Run
+    under a timeout — the failure mode is a hang, not an error."""
+    import threading
+
+    df = spark.createDataFrame(
+        [(1.0, float("nan")), (2.0, 3.0)], "id_a double, id_b double"
+    )
+
+    def labels(**kw):
+        rows = connected_components(df, **kw).collect()
+        return sorted((repr(r.id), repr(r.component)) for r in rows)
+
+    got = []
+    t = threading.Thread(target=lambda: got.extend(labels()), daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "driver tier hung on a NaN id"
+    want = labels(driver_max_edges=None)
+    assert got == want
+    assert want == [
+        ("1.0", "1.0"), ("2.0", "2.0"), ("3.0", "2.0"), ("nan", "1.0")
+    ]

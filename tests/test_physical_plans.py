@@ -254,3 +254,84 @@ def test_similarity_ann_single_scan_with_broadcast_flags(spark):
     pruned = assign.filter(F.col("cell").isin([0, 1, 2, 3]))
     ap = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in ap and "In(cell" in ap, ap
+
+
+def _edge_side_nodes(plan, edge_cols: set) -> list:
+    """For each scan of the loop-invariant edge relation (a cached or
+    checkpointed scan whose output covers ``edge_cols``) that feeds a
+    join as edges: the Exchange/Sort nodes between that join and the
+    scan. A scan under an aggregate feeds a derived relation instead
+    (e.g. round 0's initial labels) and is skipped."""
+    found = []
+
+    def walk(node, since_join):
+        name = node.nodeName()
+        if name.endswith("Join"):
+            since_join = []
+        elif "Aggregate" in name:
+            since_join = None
+        elif since_join is not None and name in ("Exchange", "Sort"):
+            since_join = since_join + [name]
+        out = node.output()
+        names = {out.apply(i).name() for i in range(out.size())}
+        scan = name == "InMemoryTableScan" or name.startswith("Scan ExistingRDD")
+        if scan and edge_cols <= names and since_join is not None:
+            found.append(since_join)
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), since_join)
+
+    walk(plan, None)
+    return found
+
+
+def test_fixpoint_rounds_reuse_keyed_edge_layout(spark, monkeypatch):
+    """Every round of the forced distributed CC, BFS and PageRank joins
+    the loop-invariant edge relation without re-exchanging or
+    re-sorting it: the keyed layout the fixpoint driver builds once
+    satisfies the round's sort-merge join (broadcast disabled so the
+    join is SMJ)."""
+    from pyspark.sql import functions as F
+
+    from geoestate_etl_spark.operators import fixpoint
+    from geoestate_etl_spark.operators.components import connected_components
+    from geoestate_etl_spark.operators.pagerank import pagerank
+    from geoestate_etl_spark.operators.paths import bfs_distances
+
+    plans = []
+    real = fixpoint._round
+
+    def recording(df, rows):
+        # the initial physical plan, captured before AQE executes it
+        plans.append(df._jdf.queryExecution().executedPlan().executedPlan())
+        return real(df, rows)
+
+    monkeypatch.setattr(fixpoint, "_round", recording)
+    chain = spark.range(0, 500).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    cases = [
+        (
+            lambda: connected_components(
+                chain.toDF("id_a", "id_b"), driver_max_edges=None, max_iter=3
+            ),
+            {"src", "dst"},
+        ),
+        (lambda: bfs_distances(chain, source=0, max_hops=3), {"u", "v"}),
+        (lambda: pagerank(chain, iters=3), {"src", "dst"}),
+    ]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for run, edge_cols in cases:
+            plans.clear()
+            run()
+            rounds = 0
+            for plan in plans:
+                sides = _edge_side_nodes(plan, edge_cols)
+                assert all(s == [] for s in sides), plan.toString()
+                rounds += bool(sides)
+            assert rounds == 3, f"{rounds} round plans join the edges"
+    finally:
+        spark.conf.set(key, saved)
